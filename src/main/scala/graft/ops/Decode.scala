@@ -16,20 +16,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Decode {
 
-  /** OP-10: Kafka envelope binary→string projection with rename
-    * (`CAST(key AS STRING) key, CAST(value AS STRING) value`). */
-  def castKeyValue(df: DataFrame): DataFrame =
-    df.selectExpr("CAST(key AS STRING) key", "CAST(value AS STRING) value")
-
-  /** OP-11/OP-12: parse a JSON string column against an explicit schema,
-    * replacing the column (PERMISSIVE: malformed → null row). */
-  def parseJson(df: DataFrame, colName: String, schema: StructType): DataFrame =
-    df.withColumn(colName, from_json(col(colName), schema))
-
-  /** OP-13: flatten all fields of a struct column to top level. */
-  def expandStruct(df: DataFrame, colName: String): DataFrame =
-    df.select(col(s"$colName.*"))
-
   /** OP-11+13 fused: cast+parse+expand in one projection. */
   def parseAndExpand(df: DataFrame, schema: StructType): DataFrame =
     df.select(from_json(col("value").cast("string"), schema).as("v"))
@@ -55,8 +41,4 @@ object Decode {
   /** OP-17: `split(birthDay,'-')[0]` — year of a YYYY-MM-DD string.
     * split always returns ≥1 element, so index 0 is ANSI-safe. */
   def yearOf(birthDay: Column): Column = split(birthDay, "-").getItem(0)
-
-  /** OP-19: serialize all columns of each row into one JSON string. */
-  def toJsonAll(df: DataFrame, as: String = "value"): DataFrame =
-    df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as(as))
 }

@@ -319,29 +319,6 @@ object SeqGraphQueries {
 
   // ------------------------------------------------- shared graph base
 
-  /** The support-pruned co-purchase DIRECTED-pair list shared by op194 /
-    * op202 / op208 / op209 / op213: distinct (order, part) incidences,
-    * baskets capped at [[prBasketCap]] distinct parts, pairs kept only
-    * with support ≥ 2 co-occurring orders (the op170 A-priori prune —
-    * at 100 TB the prune bounds the edge list BEFORE any self-join).
-    * One row per undirected edge with p1 < p2. */
-  /** Canonical (p1 < p2) co-purchase pairs, one row per (order, pair) —
-    * the shared prefix of [[supportPrunedPairs]] and [[basketCliqueUnd]].
-    *
-    * Optimization r16 (guide §2.3/§2.4, measured): the original spelling
-    * — distinct → basket-size groupBy → semi-join → self-equi-join on
-    * l_orderkey → pair groupBy — planned FIVE exchanges and evaluated
-    * the scan+distinct+size-filter subtree twice (once per self-join
-    * side; Catalyst does not share it). Since the basket cap bounds a
-    * basket at [[prBasketCap]] parts, the whole pair generation fits
-    * map-side after ONE order-keyed aggregate: collect the basket as a
-    * sorted distinct array (collect_set ⊇ the old distinct; array_sort
-    * restores determinism), filter on its size (= the old distinct
-    * count), and explode the ≤ C(cap,2) = 21 ordered pairs with
-    * higher-order array functions (codegen'd, no UDF). Two exchanges
-    * total — (l_orderkey) then the consumer's (p1,p2) — and lineitem is
-    * scanned once. Every graph query downstream inherits the saving;
-    * results are bit-identical (hash-gated at sf0.001/0.01/0.1). */
   /** The size-capped distinct basket of each order as ONE sorted array
     * row — the shared aggregate [[basketPairs]] explodes into pairs and
     * op213's nbk explodes into (order, part) incidences.
@@ -359,6 +336,23 @@ object SeqGraphQueries {
       .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
       .where(size(col("ps")) <= prBasketCap)
 
+  /** Canonical (p1 < p2) co-purchase pairs, one row per (order, pair) —
+    * the shared prefix of [[supportPrunedPairs]] and [[basketCliqueUnd]].
+    *
+    * Optimization r16 (guide §2.3/§2.4, measured): the original spelling
+    * — distinct → basket-size groupBy → semi-join → self-equi-join on
+    * l_orderkey → pair groupBy — planned FIVE exchanges and evaluated
+    * the scan+distinct+size-filter subtree twice (once per self-join
+    * side; Catalyst does not share it). Since the basket cap bounds a
+    * basket at [[prBasketCap]] parts, the whole pair generation fits
+    * map-side after ONE order-keyed aggregate: collect the basket as a
+    * sorted distinct array (collect_set ⊇ the old distinct; array_sort
+    * restores determinism), filter on its size (= the old distinct
+    * count), and explode the ≤ C(cap,2) = 21 ordered pairs with
+    * higher-order array functions (codegen'd, no UDF). Two exchanges
+    * total — (l_orderkey) then the consumer's (p1,p2) — and lineitem is
+    * scanned once. Every graph query downstream inherits the saving;
+    * results are bit-identical (hash-gated at sf0.001/0.01/0.1). */
   private def basketPairs(s: SparkSession, d: String): DataFrame =
     basketArrays(s, d)
       // ps is sorted ascending + distinct, so pairing each element with
@@ -380,6 +374,10 @@ object SeqGraphQueries {
       .groupBy("p1", "p2").agg(count(lit(1)).as("supp"))
       .where(col("supp") >= 2)
 
+  /** The support-pruned co-purchase pair list shared by op194 / op202 /
+    * op208 / op209 / op213: [[basketPairs]] kept only with support ≥ 2
+    * co-occurring orders (the op170 A-priori prune — at 100 TB the
+    * prune bounds the edge list BEFORE any self-join). */
   private def supportPrunedPairs(s: SparkSession, d: String): DataFrame =
     supportPrunedPairsW(s, d).select("p1", "p2")
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model.Schemas
 import graft.ops.Decode
@@ -157,28 +158,30 @@ object StediQueries {
     * so the oracle truncates ts to milliseconds too. */
   val op123StreamBoundedJoin: Q = (s, d) =>
     ordered(
-      drainStediPair(s, d, "op123") { (risks, customers) =>
+      drainStediPair(s, d, "op123", Tables.customer(s, d).schema,
+          Tables.eventsRaw(s, d).schema) { (risks, customers) =>
         Stedi.joinRiskBounded(risks, customers, maxAge = "24 hours")
       },
       "customer", "score", "email", "birthYear")
 
   /** Drive the decoded STEDI pair (risk stream + customer stream, both
-    * through the real wire-frame synthesis on FILE-SOURCE streams) into
-    * `pipe` and drain under Trigger.AvailableNow / append. Customers
-    * get the deterministic seenAt op123's oracle replays. Factored so
-    * op306 chains its second stateful operator onto the same inputs. */
-  private def drainStediPair(s: SparkSession, d: String, tag: String)(
+    * through the real wire-frame synthesis on FILE-SOURCE streams of
+    * the caller's raw `customer` / `events` schemas) into `pipe` and
+    * drain under Trigger.AvailableNow / append. Customers get the
+    * deterministic seenAt op123's oracle replays. The stateful width is
+    * the caller's session width (`spark.sql.shuffle.partitions`); the
+    * drain sets no session conf. Factored so op306 chains its second
+    * stateful operator onto the same inputs. */
+  private def drainStediPair(s: SparkSession, d: String, tag: String,
+      custSchema: StructType, evSchema: StructType)(
       pipe: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val custSchema = s.read.parquet(s"$d/customer.parquet").schema
-    val evSchema = Tables.eventsRaw(s, d).schema
     val dir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_")
     val custDir = java.nio.file.Files.createDirectory(dir.resolve("customer"))
     val evDir = java.nio.file.Files.createDirectory(dir.resolve("events"))
     val custLink = custDir.resolve("customer.parquet")
     val evLink = evDir.resolve("events.parquet")
     val name = s"graft_${tag}_${System.nanoTime()}"
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     try {
       java.nio.file.Files.createSymbolicLink(custLink,
         java.nio.file.Paths.get(s"$d/customer.parquet"))
@@ -193,15 +196,11 @@ object StediQueries {
       val risks = Stedi.parseRiskEventsFull(
         StediFixtures.riskFramesFrom(Tables.eventsColumns(
           s.readStream.schema(evSchema).parquet(evDir.toString))))
-      // stream-stream join state over a handful of keys: narrow the
-      // stateful shuffle for the drain's duration
-      s.conf.set("spark.sql.shuffle.partitions", "8")
       val q = pipe(risks, customers)
         .writeStream.outputMode("append").format("memory").queryName(name)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       java.nio.file.Files.deleteIfExists(custLink)
       java.nio.file.Files.deleteIfExists(evLink)
       java.nio.file.Files.deleteIfExists(custDir)
@@ -225,7 +224,8 @@ object StediQueries {
         custkey.cast("int") % 720, lit(0), lit(0))
 
   /** op306's CLOSED-WINDOW cutoff — the final propagated watermark,
-    * batch-computable from the fixture:
+    * batch-computable from the fixture and evaluated here ONCE, to a
+    * driver-side TIMESTAMP literal (null on empty inputs):
     * min(max(riskTime), max(seenAt)) − 24 h. Spark's global watermark
     * is the MIN across both event-time columns' (max − delay), and the
     * chained aggregate's eviction watermark trails it by the join's
@@ -243,13 +243,12 @@ object StediQueries {
     * eviction boundary's strictness — day windows end at midnight, so
     * this needs min(maxTs, maxSeenAt) − 24 h to hit a midnight;
     * fixtures and the StreamingSpec synthetic keep it off.) */
-  private def op306Cutoff(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .agg(max(date_trunc("millisecond", col("ts"))).as("__a"))
-      .crossJoin(Tables.customer(s, d)
-        .agg(max(seenAtFor(col("c_custkey"))).as("__b")))
-      .select((least(col("__a"), col("__b"))
-        - expr("interval 24 hours")).as("__wm"))
+  private def op306Cutoff(events: DataFrame, customer: DataFrame)
+      : org.apache.spark.sql.Column =
+    lit(events.agg(max(date_trunc("millisecond", col("ts"))).as("__a"))
+      .crossJoin(customer.agg(max(seenAtFor(col("c_custkey"))).as("__b")))
+      .select(least(col("__a"), col("__b")) - expr("interval 24 hours"))
+      .head().get(0))
 
   /** OP-30 production FLAGSHIP (op306): the bounded join CHAINED into
     * the per-customer daily risk aggregate in one streaming query —
@@ -259,25 +258,27 @@ object StediQueries {
     * stay bounded at 100 TB. Append mode: a (day, email) group emits
     * exactly once, when the watermark that propagates THROUGH the join
     * passes the day's end — so the emitted set is the full aggregate
-    * RESTRICTED to closed windows. r15 (verdict item 1): that
-    * restriction is now the explicit cross-engine contract — the
-    * drained output and the oracle both filter to
-    * window_end ≤ [[op306Cutoff]], making op306 correct at ANY scale
-    * factor (r14's fixture-invariant gate, which errored at sf0.1
-    * where late-day windows stay open, is demoted to StreamingSpec's
-    * invariant-violating synthetic fixture). The explicit Spark-side
+    * RESTRICTED to closed windows. That restriction is the explicit
+    * cross-engine contract: the drained output and the oracle both
+    * filter to window_end ≤ [[op306Cutoff]], one scalar evaluated once
+    * and applied as a literal to the drained rows and to the gate
+    * below, making op306 correct at ANY scale factor. The Spark-side
     * filter is belt-and-braces over the stream's own withholding: on
     * fixtures where the stream emits MORE than the cutoff set (small
-    * SFs close every window early) it trims to the contract; the
-    * probe above shows the stream never emits LESS. */
+    * SFs close every window early) it trims to the contract; the probe
+    * above shows the stream never emits LESS. Each input table is read
+    * once per call; the stateful width is the caller's session width. */
   val op306StediBoundedFlagship: Q = (s, d) => {
+    val customer = Tables.customer(s, d)
+    val eventsRaw = Tables.eventsRaw(s, d)
+    val events = Tables.eventsColumns(eventsRaw)
+    val wm = op306Cutoff(events, customer)
+    // the drain returns a local relation: this filter and the day
+    // collect below fold on the driver without a job
     val drained =
-      drainStediPair(s, d, "op306") { (risks, customers) =>
-        Stedi.boundedFlagshipDaily(risks, customers)
-      }.crossJoin(op306Cutoff(s, d)) // scalar dim: broadcast, no shuffle
-        .filter(to_timestamp(col("day")) + expr("interval 1 day")
-          <= col("__wm"))
-        .drop("__wm")
+      drainStediPair(s, d, "op306", customer.schema, eventsRaw.schema) {
+        (risks, customers) => Stedi.boundedFlagshipDaily(risks, customers)
+      }.filter(to_timestamp(col("day")) + expr("interval 1 day") <= wm)
     // Post-drain propagation gate (r16 advice): the Spark-side cutoff
     // filter only TRIMS — it cannot restore windows a future Spark
     // version's watermark propagation withholds, and such a change
@@ -288,22 +289,19 @@ object StediQueries {
     // appear among the closed windows; a drained set missing any of
     // them names the propagation change at the query. Both day sets
     // are ≤ the fixture's event span (~30 rows) — trivial collects.
-    val dim = broadcast(Tables.customer(s, d).select(
+    val dim = broadcast(customer.select(
       StediFixtures.emailFor(col("c_custkey")).as("b_email"),
       seenAtFor(col("c_custkey")).as("b_seen")))
-    val expectDays = Tables.events(s, d)
+    val expectDays = events
       .select(StediFixtures.emailFor(col("user_id")).as("b_cust"),
         date_trunc("millisecond", col("ts")).as("b_rt"))
       .join(dim, col("b_cust") === col("b_email") &&
         col("b_rt") >= col("b_seen") &&
         col("b_rt") <= col("b_seen") + expr("interval 24 hours"))
-      .crossJoin(op306Cutoff(s, d))
-      .filter(date_trunc("day", col("b_rt")) + expr("interval 1 day")
-        <= col("__wm"))
+      .filter(date_trunc("day", col("b_rt")) + expr("interval 1 day") <= wm)
       .select(date_format(date_trunc("day", col("b_rt")), "yyyy-MM-dd"))
       .distinct().collect().map(_.getString(0)).toSet
-    val gotDays = drained.select(col("day")).distinct()
-      .collect().map(_.getString(0)).toSet
+    val gotDays = drained.collect().map(_.getAs[String]("day")).toSet
     val withheld = expectDays -- gotDays
     require(withheld.isEmpty,
       s"op306: stream withheld ${withheld.size} closed window day(s) " +

@@ -1384,4 +1384,24 @@ class StreamingSpec extends SparkSpec {
       rm(dir.toFile)
     }
   }
+
+  test("op123/op306 drains: row sets independent of the caller's shuffle " +
+      "width, which the drain leaves untouched") {
+    // the stateful operators inherit spark.sql.shuffle.partitions from
+    // the calling session; the result must not depend on it, and the
+    // call must not change it
+    for (key <- Seq("op123_stream_bounded_join",
+        "op306_stedi_bounded_flagship")) {
+      val byWidth = Seq("1", "4").map { w =>
+        val sess = spark.newSession()
+        sess.conf.set("spark.sql.shuffle.partitions", w)
+        val rows = SparkEntry.queries(key)(sess, sfDir).collect().toSet
+        assert(sess.conf.get("spark.sql.shuffle.partitions") == w,
+          s"$key changed the caller's shuffle width $w")
+        rows
+      }
+      assert(byWidth.head.nonEmpty, s"$key drained no rows on $sfDir")
+      assert(byWidth.head == byWidth(1), s"$key: width 1 and 4 disagree")
+    }
+  }
 }
